@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout (build.sbt routes forked stdout through
   * unprefixed so the driver can parse it).
@@ -46,31 +44,17 @@ object Bench {
         }
       }
     }
-    val sparkBuilder = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // data-sized initial shuffle partitions — rationale + A/B numbers
-      // on GraftSession.initialShufflePartitions
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-          graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-            .toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // dev knob for conf A/Bs (PLANS.md round-11 floor sweep):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
+    // data-sized initial shuffle partitions (sfDir) — rationale + A/B
+    // numbers on GraftSession.initialShufflePartitions.
+    // dev knob for conf A/Bs (PLANS.md round-11 floor sweep, the r11 AQE
+    // matrix — README lists the recipes): SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        sparkBuilder.config(k.trim, v.trim)
-      }
-    }
-    val spark = sparkBuilder.getOrCreate()
+        k.trim -> v.trim
+      }.toMap
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-bench", sfDir = Some(sfDir), extraConf = extraConf)
     spark.sparkContext.setLogLevel("ERROR")
     // One known-benign stderr pattern, suppressed surgically (round 13,
     // narrowed round 14 per ADVICE): cleanSlate()'s System.gc() collects

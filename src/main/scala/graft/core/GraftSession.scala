@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * locally configured SparkSession with scale-appropriate defaults:
   *  - AQE on → runtime shuffle coalescing, broadcast conversion, skew splits
   *  - shuffle.partitions sized to the local core count (a real cluster run
-  *    would size this to ~2-3x total cores; AQE coalesces the excess)
+  *    would size this to ~2-3x total cores; AQE coalesces the excess),
+  *    the AQE starting count sized from the fixture when one is given
   *  - UTC session timezone (BigQuery TIMESTAMP semantics are UTC)
   */
 object GraftSession {
@@ -50,23 +51,48 @@ object GraftSession {
     math.min(1024, math.max(cores, bySize))
   }
 
+  /** Every key [[local]] sets, `extraConf` applied last (it overrides).
+    *
+    * Without `sfDir` this is the unsized session (`graft.Main`, the unit
+    * specs, the perfbench harness): shuffle partitions floor at 8. With
+    * `sfDir` it is the fixture-sized session Bench times and every
+    * Verify/Explain/lab run plans under: shuffle partitions = cores, and
+    * AQE starts from [[initialShufflePartitions]] of that directory. */
+  def sessionConf(cores: Int, appName: String = "graft",
+      sfDir: Option[String] = None,
+      extraConf: Map[String, String] = Map.empty): Map[String, String] = {
+    val partitions = sfDir match {
+      case None => Map("spark.sql.shuffle.partitions" ->
+        math.max(cores, 8).toString)
+      case Some(dir) => Map(
+        "spark.sql.shuffle.partitions" -> cores.toString,
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+          initialShufflePartitions(dir, cores).toString)
+    }
+    Map(
+      "spark.master" -> s"local[$cores]",
+      "spark.app.name" -> appName,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.timeType.enabled" -> "true", // 4.1 TIME feature flag
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.filterPushdown" -> "true",
+      "spark.ui.enabled" -> "false"
+    ) ++ partitions ++ extraConf
+  }
+
+  /** The one SparkSession builder: [[sessionConf]] plus the
+    * [[graft.plans.GraftExtensions]] binding. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             appName: String = "graft",
+            sfDir: Option[String] = None,
             extraConf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", math.max(cores, 8).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true") // 4.1 TIME feature flag
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.ui.enabled", "false")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
+    sessionConf(cores, appName, sfDir, extraConf)
+      .foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

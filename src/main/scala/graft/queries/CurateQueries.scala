@@ -53,7 +53,7 @@ object CurateQueries {
     * aggregates only the MATCHED rows (contaminated docs × overlapping
     * shingles), and the final left join back to the corpus id list is
     * again broadcast-sized (hit rows ≪ corpus). */
-  private def decontaminateRaw(s: SparkSession, dir: String): DataFrame =
+  private def decontaminate(s: SparkSession, dir: String): DataFrame =
     decontaminateImpl(s, dir, BenchSetRowCap)
 
   /** Driver-side row cap on the collected benchmark shingle set for the
@@ -116,9 +116,6 @@ object CurateQueries {
           (coalesce(col("n_hits"), lit(0L)) === 0).as("keep"))
     }
   }
-
-  private def decontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminateRaw(s, dir).orderBy("doc_id")
 
   private val decontaminateSql = {
     val shl = s"list_distinct(${OracleSql.shingleList(DK)})"
@@ -538,7 +535,7 @@ object CurateQueries {
     * model is GBs — there the score pass becomes one shuffle join keyed
     * on the bigram, or the model is pruned to top-k continuations per
     * context (the standard KenLM trim) to stay broadcastable. */
-  private def bigramLmScoreRaw(s: SparkSession, dir: String): DataFrame =
+  private def bigramLmScore(s: SparkSession, dir: String): DataFrame =
     bigramLmScoreImpl(s, dir, BigramLmModelRowCap)
 
   /** Driver-side row cap on the collected bigram model for the in-row
@@ -685,9 +682,6 @@ object CurateQueries {
         ((-col("sq")).cast("double") /
           (col("n_bigrams").cast("double") * lit(1000000.0))).as("avg_nll"))
   }
-
-  private def bigramLmScore(s: SparkSession, dir: String): DataFrame =
-    bigramLmScoreRaw(s, dir).orderBy("doc_id")
 
   private val bigramLmScoreSql =
     s"""WITH tk AS (
@@ -1166,10 +1160,10 @@ object CurateQueries {
     // round 17 (r16 verdict item 5): discrimination itself oracle-gated
     "x_lang_id_planted" -> QueryDef(langIdPlanted, Some(langIdPlantedSql)),
     "x_lm_score" -> QueryDef(lmScore, Some(lmScoreSql)),
-    "x_lm_bigram" -> QueryDef(bigramLmScore, Some(bigramLmScoreSql),
-      bench = true, benchFn = Some(bigramLmScoreRaw)),
-    "x_decontaminate" -> QueryDef(decontaminate, Some(decontaminateSql),
-      bench = true, benchFn = Some(decontaminateRaw)),
+    "x_lm_bigram" -> QueryDef.sorted(bigramLmScore,
+      col("doc_id"))(Some(bigramLmScoreSql), bench = true),
+    "x_decontaminate" -> QueryDef.sorted(decontaminate,
+      col("doc_id"))(Some(decontaminateSql), bench = true),
     "x_repetition_filter" -> QueryDef(repetitionFilter,
       Some(repetitionFilterSql)),
     "x_vocab_build" -> QueryDef(vocabBuild, Some(vocabBuildSql)),

@@ -85,7 +85,7 @@ object ExtQueries {
     * zero shuffles, whole-stage codegen end-to-end. Ratios are single
     * int/int IEEE divisions with the same expression tree as the oracle →
     * bit-identical, no rounding fudge. */
-  private def textStatsRaw(s: SparkSession, dir: String): DataFrame =
+  private def textStats(s: SparkSession, dir: String): DataFrame =
     graft.parallelScan(s,
         tbl(s, dir, "documents").select(col("doc_id"), col("text")))
       // tokenize exactly once per row; all stats read the bound arrays
@@ -100,9 +100,6 @@ object ExtQueries {
         TextF.qualityScoreT(col("t"), col("text")).as("quality"),
         TextF.langIdT(col("text"), col("lt")).as("lang_guess"),
         TextF.rollingHash(col("lt")).as("roll_hash"))
-
-  private def textStats(s: SparkSession, dir: String): DataFrame =
-    textStatsRaw(s, dir).orderBy("doc_id")
 
   private val textStatsSql = {
     val stop = TextF.Stopwords.map(w => s"'$w'").mkString("[", ",", "]")
@@ -152,7 +149,7 @@ object ExtQueries {
   /** Exact dedup by content fingerprint (md5 of whitespace-normalized
     * lowercase text): groupBy fingerprint, keep min doc_id. Scale: one
     * shuffle on the fingerprint — the canonical exact-dedup plan. */
-  private def dedupExactRaw(s: SparkSession, dir: String): DataFrame =
+  private def dedupExact(s: SparkSession, dir: String): DataFrame =
     // skip-partial decided COST-BASED (graft.plans.AutoSkipPartialAgg):
     // the md5 fingerprint resolves to ~NDV(text) ≈ 96% of rows through
     // the rule's hash/normalization whitelist, so with stats registered
@@ -163,9 +160,6 @@ object ExtQueries {
       .select(col("doc_id"), TextF.fingerprint(col("text")).as("fingerprint"))
       .groupBy("fingerprint")
       .agg(min("doc_id").as("keeper_doc_id"), count(lit(1)).as("n_copies"))
-
-  private def dedupExact(s: SparkSession, dir: String): DataFrame =
-    dedupExactRaw(s, dir).orderBy("fingerprint")
 
   private val dedupExactSql =
     """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
@@ -242,7 +236,7 @@ object ExtQueries {
         .select("doc_a", "doc_b"))
   }
 
-  private def minhashLshPairsRaw(s: SparkSession, dir: String): DataFrame = {
+  private def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
     val (sigs, cand) = lshCandParts(s, dir)
     val sa = sigs.toDF(sigs.columns.map(c => s"a_$c"): _*)
     val sb = sigs.toDF(sigs.columns.map(c => s"b_$c"): _*)
@@ -255,9 +249,6 @@ object ExtQueries {
       .select(col("doc_a"), col("doc_b"),
         (matches.cast("double") / 8.0).as("est_jaccard"))
   }
-
-  private def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
-    minhashLshPairsRaw(s, dir).orderBy("doc_a", "doc_b")
 
   /** DuckDB CTE chain ending in `cand(doc_a, doc_b)` — the SQL half of
     * [[lshCandParts]], shared with the [[GraphQueries]] oracle. */
@@ -482,10 +473,10 @@ object ExtQueries {
     * hot-shingle df cap, shared checkpoint discipline); the denominator
     * stays the full |A| so the cap only thins candidates, never biases a
     * reported score. */
-  private def containmentPairsRaw(s: SparkSession, dir: String): DataFrame =
+  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
     containmentAtCap(s, dir, MaxShingleDf)
 
-  /** [[containmentPairsRaw]] parameterized by the hot-shingle df cap —
+  /** [[containmentPairs]] parameterized by the hot-shingle df cap —
     * the knob the round-11 sf10 sweep turns (PLANS.md) and the recall
     * witness (`x_containment_recall`) quantifies. `Int.MaxValue` = no
     * cap (exact containment; the ground truth the recall is measured
@@ -584,9 +575,6 @@ object ExtQueries {
       .select(col("p.doc_a"), col("p.doc_b"), col("p.containment"))
       .filter(col("containment") >= ContainmentMin)
   }
-
-  private def containmentPairs(s: SparkSession, dir: String): DataFrame =
-    containmentPairsRaw(s, dir).orderBy("doc_a", "doc_b")
 
   private val containmentPairsSql =
     s"""WITH sh_all AS (
@@ -2258,13 +2246,10 @@ object ExtQueries {
     * NULL-payload rows are skipped by the operator (no media, no
     * frames) — the same rows the previous `WHERE text IS NOT NULL`
     * removed. No shuffle: binary never leaves its input split. */
-  private def multimodalFramesRaw(s: SparkSession, dir: String): DataFrame =
+  private def multimodalFrames(s: SparkSession, dir: String): DataFrame =
     graft.ops.MediaFrames.frameStats(
       tbl(s, dir, "documents"), idCol = "doc_id", payloadCol = "text",
       frameBytes = 64, sampleEvery = 4)
-
-  private def multimodalFrames(s: SparkSession, dir: String): DataFrame =
-    multimodalFramesRaw(s, dir).orderBy("doc_id")
 
   // Byte-based like the features oracle: frame boundaries are BYTE
   // offsets (substr of the blob's hex, 2 hex chars per byte), so
@@ -2280,20 +2265,18 @@ object ExtQueries {
       |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin
 
   val all: Map[String, QueryDef] = Map(
-    "x_text_stats" -> QueryDef(textStats, Some(textStatsSql), bench = true,
-      benchFn = Some(textStatsRaw)),
-    "x_dedup_exact" -> QueryDef(dedupExact, Some(dedupExactSql),
-      bench = true, benchFn = Some(dedupExactRaw)),
+    "x_text_stats" -> QueryDef.sorted(textStats, col("doc_id"))(
+      Some(textStatsSql), bench = true),
+    "x_dedup_exact" -> QueryDef.sorted(dedupExact, col("fingerprint"))(
+      Some(dedupExactSql), bench = true),
     "x_minhash_signatures" -> QueryDef(minhashSignatures,
       Some(minhashSignaturesSql)),
-    "x_minhash_lsh_pairs" -> QueryDef(minhashLshPairs,
-      Some(minhashLshPairsSql), bench = true,
-      benchFn = Some(minhashLshPairsRaw)),
+    "x_minhash_lsh_pairs" -> QueryDef.sorted(minhashLshPairs,
+      col("doc_a"), col("doc_b"))(Some(minhashLshPairsSql), bench = true),
     "x_simhash" -> QueryDef(simhash, Some(simhashSql)),
     "x_simhash_pairs" -> QueryDef(simhashPairs, Some(simhashPairsSql)),
-    "x_containment_pairs" -> QueryDef(containmentPairs,
-      Some(containmentPairsSql), bench = true,
-      benchFn = Some(containmentPairsRaw),
+    "x_containment_pairs" -> QueryDef.sorted(containmentPairs,
+      col("doc_a"), col("doc_b"))(Some(containmentPairsSql), bench = true,
       benchNote = Some("exact containment is Sum(df^2) candidate work " +
         "by construction; the hot-shingle df cap is the recall/time " +
         "knob (SPARK_GRAFT_SHINGLE_DF_CAP, mirrored in the oracle). " +
@@ -2356,7 +2339,7 @@ object ExtQueries {
     "x_ann_recall_eval" -> QueryDef(annRecallEval, Some(annRecallEvalSql)),
     "x_multimodal_features" -> QueryDef(multimodalFeatures,
       Some(multimodalFeaturesSql)),
-    "x_multimodal_frames" -> QueryDef(multimodalFrames,
-      Some(multimodalFramesSql), benchFn = Some(multimodalFramesRaw))
+    "x_multimodal_frames" -> QueryDef.sorted(multimodalFrames,
+      col("doc_id"))(Some(multimodalFramesSql))
   )
 }

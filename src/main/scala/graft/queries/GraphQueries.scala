@@ -29,7 +29,7 @@ object GraphQueries {
     * reachable through LSH candidate pairs, cluster size, and the
     * keep/drop verdict (keeper = the component minimum). Docs with no
     * near-dup candidates are their own singleton component. */
-  private def dedupComponentsRaw(s: SparkSession, dir: String,
+  private def dedupComponents(s: SparkSession, dir: String,
       hotKeyThreshold: Long =
         Components.DefaultHotKeyThreshold): DataFrame = {
     val (_, cand) = ExtQueries.lshCandParts(s, dir)
@@ -48,9 +48,6 @@ object GraphQueries {
         (col("doc_id") === col("component")).as("is_keeper"))
   }
 
-  private def dedupComponents(s: SparkSession, dir: String): DataFrame =
-    dedupComponentsRaw(s, dir).orderBy("doc_id")
-
   /** The broadcast-hot-key contraction arm under the SAME oracle
     * (round 14, verdict item 3): with the threshold forced to 1, every
     * multi-edge key in every round takes the two-phase path — the
@@ -59,7 +56,7 @@ object GraphQueries {
     * synthetic graphs (`ComponentsSpec` pins the >50%-of-edges cluster
     * and the per-task bound; this entry pins the arm's exactness). */
   private def dedupComponentsHot(s: SparkSession, dir: String): DataFrame =
-    dedupComponentsRaw(s, dir, hotKeyThreshold = 1L).orderBy("doc_id")
+    dedupComponents(s, dir, hotKeyThreshold = 1L).orderBy("doc_id")
 
   private val dedupComponentsSql =
     s"""WITH RECURSIVE ${ExtQueries.lshCandCtes},
@@ -104,7 +101,7 @@ object GraphQueries {
     * measured win at sf1 is ~2×). Same output, cheaper carrier. */
   private val MaxHops = 3
 
-  private def shortestPathRaw(s: SparkSession, dir: String): DataFrame = {
+  private def shortestPath(s: SparkSession, dir: String): DataFrame = {
     def tagged(tag: Int, c: org.apache.spark.sql.Column) =
       (c.cast("long") * 4 + tag).as("t")
     val TagC = 0; val TagO = 1; val TagS = 2
@@ -161,9 +158,6 @@ object GraphQueries {
         shiftright(col("node"), 2).cast("string")).as("node"),
       col("dist"))
   }
-
-  private def shortestPath(s: SparkSession, dir: String): DataFrame =
-    shortestPathRaw(s, dir).orderBy("node")
 
   private val shortestPathSql =
     s"""WITH RECURSIVE e AS (
@@ -471,12 +465,12 @@ object GraphQueries {
        |         AS n_triangles""".stripMargin
 
   val all: Map[String, QueryDef] = Map(
-    "x_dedup_components" -> QueryDef(dedupComponents, Some(dedupComponentsSql),
-      bench = true, benchFn = Some(dedupComponentsRaw(_, _))),
+    "x_dedup_components" -> QueryDef.sorted(dedupComponents(_, _),
+      col("doc_id"))(Some(dedupComponentsSql), bench = true),
     "x_dedup_components_hot" -> QueryDef(dedupComponentsHot,
       Some(dedupComponentsSql)),
-    "x_shortest_path" -> QueryDef(shortestPath, Some(shortestPathSql),
-      bench = true, benchFn = Some(shortestPathRaw)),
+    "x_shortest_path" -> QueryDef.sorted(shortestPath,
+      col("node"))(Some(shortestPathSql), bench = true),
     "x_pagerank" -> QueryDef(pageRank, Some(pageRankSql)),
     "x_knn_graph" -> QueryDef(knnGraph, Some(knnGraphSql)),
     "x_triangle_count" -> QueryDef(triangleCount, Some(triangleCountSql))

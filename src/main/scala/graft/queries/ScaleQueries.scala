@@ -137,7 +137,7 @@ object ScaleQueries {
     * hint pins SMJ so
     * the plan's shuffle-freeness is attributable to bucketing, not to a
     * broadcast. Output: per-status counts + exact decimal quantity sums. */
-  private def bucketedJoinRaw(s: SparkSession, dir: String): DataFrame = {
+  private def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     s.table(liT).hint("merge")
       .join(s.table(ordT),
@@ -147,12 +147,6 @@ object ScaleQueries {
         sum(col("l_quantity").cast(DecimalType(18, 2))).cast("double")
           .as("sum_qty"))
   }
-
-  // The ORDER BY on the 3-row result exists only for oracle-hash
-  // determinism; the bench times the raw aggregate (QueryDef contract,
-  // same as p2_normalize / x_shortest_path).
-  private def bucketedJoin(s: SparkSession, dir: String): DataFrame =
-    bucketedJoinRaw(s, dir).orderBy("o_orderstatus")
 
   /** Bucketed-layout star join (TPC-H Q5 shape, same semantics and SAME
     * oracle as `w_star_join`): all three dims collapse into one ≤|customer|
@@ -166,7 +160,7 @@ object ScaleQueries {
     * pays it once at load. Registered separately so the raw-fixture
     * oracle contract of `w_star_join` stays intact; `ScaleSpec` asserts
     * the fact-side exchange count is zero. */
-  private def starBucketedRaw(s: SparkSession, dir: String): DataFrame = {
+  private def starBucketed(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     val dims = tbl(s, dir, "region")
       .join(tbl(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
@@ -182,9 +176,6 @@ object ScaleQueries {
       .agg(count(lit(1)).as("n_lineitems"),
         sum(rev).cast("double").as("revenue"))
   }
-
-  private def starBucketed(s: SparkSession, dir: String): DataFrame =
-    starBucketedRaw(s, dir).orderBy("r_name", "n_name")
 
   private val starBucketedSql =
     """SELECT r_name, n_name, count(*) AS n_lineitems,
@@ -208,7 +199,7 @@ object ScaleQueries {
     * what the same query costs once the warehouse pays the one-time
     * layout, which is how the reference's BigQuery tables behave (every
     * stage pre-materialized). */
-  private def dailyBucketedRaw(s: SparkSession, dir: String): DataFrame = {
+  private def dailyBucketed(s: SparkSession, dir: String): DataFrame = {
     val (liT, ordT) = ensureBucketed(s, dir, autoBuckets(s, dir))
     val tripss = s.table(liT).hint("merge")
       .join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
@@ -231,9 +222,6 @@ object ScaleQueries {
         col("avg_drive_time"), col("total_drive_time"),
         col("avg_amount"), col("sum_amount"))
   }
-
-  private def dailyBucketed(s: SparkSession, dir: String): DataFrame =
-    dailyBucketedRaw(s, dir).orderBy(col("pickup_date").desc)
 
   /** Events layout for window queries: bucketed by `user_id` AND sorted
     * by (user_id, us, event_id), ONE file per bucket — `repartition` on
@@ -289,20 +277,22 @@ object ScaleQueries {
     evT
   }
 
-  /** Sorted-bucketed-layout twin of `w_moving_agg` (same semantics, SAME
-    * oracle SQL): all three frames read the pre-sorted bucketed events
-    * table, so the plan is scan → window → window — no exchange, no
-    * sort (`ScaleSpec` asserts both). This is the 100 TB answer to the
-    * window-sort tax: a time-series warehouse stores event streams
-    * clustered by entity and ordered by time once, instead of re-sorting
-    * per query. The raw `w_moving_agg` stays registered as the honest
-    * unprepared-data cost. */
   /** Build a frame with `bucketedTableScan.outputOrdering=true`, force
     * its physical plan while the conf is set (the `executedPlan` lazy
     * val reads SQLConf at first access, so later actions keep the
     * sorted-scan shape), then RESTORE the previous value — other
     * bucketed queries' plan shape must not depend on whether this query
-    * ran first in the bench session (advice r10). */
+    * ran first in the bench session (advice r10). A frame derived from
+    * the result (the gated `orderBy` of [[QueryDef.sorted]], Verify's
+    * `coalesce(1)`) re-plans outside the scope; `BenchedFnSpec` pins
+    * that both shapes return the same rows.
+    *
+    * Sort propagation from bucketed scans is conf-gated (Spark lists
+    * each bucket's files at planning to prove the one-file-per-bucket
+    * invariant the ordering rests on — a deliberate planning-time
+    * cost). The listing is InMemoryFileIndex-cached, and this layout
+    * writes exactly one file per bucket (repartition on the bucket key
+    * before the write), so the proof always succeeds here. */
   private def withSortedBucketScan(s: SparkSession)(
       build: => DataFrame): DataFrame = {
     val key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
@@ -315,34 +305,29 @@ object ScaleQueries {
     }
   }
 
-  // Sort propagation from bucketed scans is conf-gated (Spark lists
-  // each bucket's files at planning to prove the one-file-per-bucket
-  // invariant the ordering rests on — a deliberate planning-time
-  // cost). The listing is InMemoryFileIndex-cached, and this layout
-  // writes exactly one file per bucket (repartition on the bucket key
-  // before the write), so the proof always succeeds here.
-  private def movingBucketedBuild(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val evT = ensureEventsBucketed(s, dir)
-    val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val rows7 = byTime.rowsBetween(-6, Window.currentRow)
-    val hour = Window.partitionBy("user_id").orderBy("us")
-      .rangeBetween(-3600000000L, Window.currentRow)
-    val dec = col("value").cast(DecimalType(18, 2))
-    s.table(evT)
-      .select(col("user_id"), col("event_id"),
-        sum(dec).over(rows7).cast("double").as("mov7_sum"),
-        (sum(dec).over(rows7).cast("double") /
-          count(lit(1)).over(rows7)).as("mov7_avg"),
-        sum(dec).over(hour).cast("double").as("hour_sum"))
-  }
-
-  private def movingBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { movingBucketedBuild(s, dir) }
-
+  /** Sorted-bucketed-layout twin of `w_moving_agg` (same semantics, SAME
+    * oracle SQL): all three frames read the pre-sorted bucketed events
+    * table, so the plan is scan → window → window — no exchange, no
+    * sort (`ScaleSpec` asserts both). This is the 100 TB answer to the
+    * window-sort tax: a time-series warehouse stores event streams
+    * clustered by entity and ordered by time once, instead of re-sorting
+    * per query. The raw `w_moving_agg` stays registered as the honest
+    * unprepared-data cost. */
   private def movingBucketed(s: SparkSession, dir: String): DataFrame =
     withSortedBucketScan(s) {
-      movingBucketedBuild(s, dir).orderBy("user_id", "event_id")
+      import org.apache.spark.sql.expressions.Window
+      val evT = ensureEventsBucketed(s, dir)
+      val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
+      val rows7 = byTime.rowsBetween(-6, Window.currentRow)
+      val hour = Window.partitionBy("user_id").orderBy("us")
+        .rangeBetween(-3600000000L, Window.currentRow)
+      val dec = col("value").cast(DecimalType(18, 2))
+      s.table(evT)
+        .select(col("user_id"), col("event_id"),
+          sum(dec).over(rows7).cast("double").as("mov7_sum"),
+          (sum(dec).over(rows7).cast("double") /
+            count(lit(1)).over(rows7)).as("mov7_avg"),
+          sum(dec).over(hour).cast("double").as("hour_sum"))
     }
 
   // ------------------------------------------------------------------
@@ -361,35 +346,27 @@ object ScaleQueries {
     * sorted by (user_id, us, event_id) — the whole gaps-and-islands
     * chain plans with ZERO Exchange and ZERO Sort (ScaleSpec pins it):
     * scan → window → window → hash-aggregate. */
-  private def sessionizeBucketedBuild(s: SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val evT = ensureEventsBucketed(s, dir)
-    val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
-    s.table(evT)
-      .withColumn("prev_us", lag("us", 1).over(byTime))
-      .withColumn("brk",
-        when(col("prev_us").isNull ||
-          col("us") - col("prev_us") > TemporalQueries.SessionGapUs, 1L)
-          .otherwise(0L))
-      .withColumn("session_seq",
-        sum("brk").over(byTime.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)))
-      .groupBy("user_id", "session_seq")
-      .agg(
-        count(lit(1)).as("n_events"),
-        min("us").as("start_us"),
-        max("us").as("end_us"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("sum_value"))
-  }
-
-  private def sessionizeBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { sessionizeBucketedBuild(s, dir) }
-
   private def sessionizeBucketed(s: SparkSession, dir: String): DataFrame =
     withSortedBucketScan(s) {
-      sessionizeBucketedBuild(s, dir).orderBy("user_id", "session_seq")
+      import org.apache.spark.sql.expressions.Window
+      val evT = ensureEventsBucketed(s, dir)
+      val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
+      s.table(evT)
+        .withColumn("prev_us", lag("us", 1).over(byTime))
+        .withColumn("brk",
+          when(col("prev_us").isNull ||
+            col("us") - col("prev_us") > TemporalQueries.SessionGapUs, 1L)
+            .otherwise(0L))
+        .withColumn("session_seq",
+          sum("brk").over(byTime.rowsBetween(Window.unboundedPreceding,
+            Window.currentRow)))
+        .groupBy("user_id", "session_seq")
+        .agg(
+          count(lit(1)).as("n_events"),
+          min("us").as("start_us"),
+          max("us").as("end_us"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double")
+            .as("sum_value"))
     }
 
   /** `w_window_funcs` over the bucketed layout: the time-ordered
@@ -398,26 +375,20 @@ object ScaleQueries {
     * re-sort WITHIN partitions (ordering by value is inherent to the
     * query, but the shuffle is not) — zero Exchange, one in-partition
     * Sort. */
-  private def windowBucketedBuild(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val evT = ensureEventsBucketed(s, dir)
-    val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val byValue = Window.partitionBy("user_id").orderBy("value", "event_id")
-    s.table(evT)
-      .select(col("user_id"), col("event_id"),
-        lag("value", 1).over(byTime).as("prev_value"),
-        lead("value", 1).over(byTime).as("next_value"),
-        ntile(4).over(byValue).as("value_quartile"),
-        round(percent_rank().over(byValue), 6).as("value_prank"),
-        round(cume_dist().over(byValue), 6).as("value_cdist"))
-  }
-
-  private def windowBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { windowBucketedBuild(s, dir) }
-
   private def windowBucketed(s: SparkSession, dir: String): DataFrame =
     withSortedBucketScan(s) {
-      windowBucketedBuild(s, dir).orderBy("user_id", "event_id")
+      import org.apache.spark.sql.expressions.Window
+      val evT = ensureEventsBucketed(s, dir)
+      val byTime = Window.partitionBy("user_id").orderBy("us", "event_id")
+      val byValue =
+        Window.partitionBy("user_id").orderBy("value", "event_id")
+      s.table(evT)
+        .select(col("user_id"), col("event_id"),
+          lag("value", 1).over(byTime).as("prev_value"),
+          lead("value", 1).over(byTime).as("next_value"),
+          ntile(4).over(byValue).as("value_quartile"),
+          round(percent_rank().over(byValue), 6).as("value_prank"),
+          round(cume_dist().over(byValue), 6).as("value_cdist"))
     }
 
   /** `x_range_join` over the bucketed layout: both self-join sides scan
@@ -427,29 +398,22 @@ object ScaleQueries {
     * shuffles are the raw form's whole cost); only in-partition sorts
     * on the derived bucket key remain. The explode fan-out (each left
     * event to its two candidate window epochs) is partition-preserving. */
-  private def rangeBucketedBuild(s: SparkSession, dir: String): DataFrame = {
-    val w = TemporalQueries.RangeWindowUs
-    val evT = ensureEventsBucketed(s, dir)
-    val ev = s.table(evT)
-      .select(col("user_id"), col("event_id"), col("us"))
-    val a = ev.select(col("user_id"), col("event_id").as("id_a"),
-      col("us").as("us_a"),
-      explode(array(expr(s"us div $w"), expr(s"us div $w") + 1))
-        .as("bucket"))
-    val b = ev.select(col("user_id"), col("event_id").as("id_b"),
-      col("us").as("us_b"), expr(s"us div $w").as("bucket"))
-    a.join(b, Seq("user_id", "bucket"))
-      .filter(col("us_b") > col("us_a") && col("us_b") <= col("us_a") + w)
-      .select(col("user_id"), col("id_a"), col("id_b"),
-        (col("us_b") - col("us_a")).as("gap_us"))
-  }
-
-  private def rangeBucketedRaw(s: SparkSession, dir: String): DataFrame =
-    withSortedBucketScan(s) { rangeBucketedBuild(s, dir) }
-
   private def rangeBucketed(s: SparkSession, dir: String): DataFrame =
     withSortedBucketScan(s) {
-      rangeBucketedBuild(s, dir).orderBy("user_id", "id_a", "id_b")
+      val w = TemporalQueries.RangeWindowUs
+      val evT = ensureEventsBucketed(s, dir)
+      val ev = s.table(evT)
+        .select(col("user_id"), col("event_id"), col("us"))
+      val a = ev.select(col("user_id"), col("event_id").as("id_a"),
+        col("us").as("us_a"),
+        explode(array(expr(s"us div $w"), expr(s"us div $w") + 1))
+          .as("bucket"))
+      val b = ev.select(col("user_id"), col("event_id").as("id_b"),
+        col("us").as("us_b"), expr(s"us div $w").as("bucket"))
+      a.join(b, Seq("user_id", "bucket"))
+        .filter(col("us_b") > col("us_a") && col("us_b") <= col("us_a") + w)
+        .select(col("user_id"), col("id_a"), col("id_b"),
+          (col("us_b") - col("us_a")).as("gap_us"))
     }
 
   private val bucketedJoinSql =
@@ -803,29 +767,29 @@ object ScaleQueries {
        |FROM z GROUP BY event_type ORDER BY event_type""".stripMargin
 
   val all: Map[String, QueryDef] = Map(
-    "b_bucketed_join" -> QueryDef(bucketedJoin, Some(bucketedJoinSql),
-      bench = true, benchFn = Some(bucketedJoinRaw)),
-    "b_star_bucketed" -> QueryDef(starBucketed, Some(starBucketedSql),
-      bench = true, benchFn = Some(starBucketedRaw)),
-    "a3_daily_bucketed" -> QueryDef(dailyBucketed,
-      Some(CoreQueries.dailyMetricsSql), bench = true,
-      benchFn = Some(dailyBucketedRaw)),
-    "w_moving_bucketed" -> QueryDef(movingBucketed,
-      Some(WarehouseQueries.movingAggSql), bench = true,
-      benchFn = Some(movingBucketedRaw)),
-    "x_sessionize_bucketed" -> QueryDef(sessionizeBucketed,
+    "b_bucketed_join" -> QueryDef.sorted(bucketedJoin,
+      col("o_orderstatus"))(Some(bucketedJoinSql), bench = true),
+    "b_star_bucketed" -> QueryDef.sorted(starBucketed,
+      col("r_name"), col("n_name"))(Some(starBucketedSql), bench = true),
+    "a3_daily_bucketed" -> QueryDef.sorted(dailyBucketed,
+      col("pickup_date").desc)(Some(CoreQueries.dailyMetricsSql),
+      bench = true),
+    "w_moving_bucketed" -> QueryDef.sorted(movingBucketed,
+      col("user_id"), col("event_id"))(Some(WarehouseQueries.movingAggSql),
+      bench = true),
+    "x_sessionize_bucketed" -> QueryDef.sorted(sessionizeBucketed,
+      col("user_id"), col("session_seq"))(
       Some(TemporalQueries.sessionizeSql), bench = true,
-      benchFn = Some(sessionizeBucketedRaw),
       benchNote = Some("sorted-bucketed twin of x_sessionize: zero " +
         "exchange, zero sort over the prepared events layout")),
-    "w_window_bucketed" -> QueryDef(windowBucketed,
+    "w_window_bucketed" -> QueryDef.sorted(windowBucketed,
+      col("user_id"), col("event_id"))(
       Some(WarehouseQueries.windowFuncsSql), bench = true,
-      benchFn = Some(windowBucketedRaw),
       benchNote = Some("sorted-bucketed twin of w_window_funcs: zero " +
         "exchange; only the inherent by-value in-partition sort remains")),
-    "x_range_bucketed" -> QueryDef(rangeBucketed,
+    "x_range_bucketed" -> QueryDef.sorted(rangeBucketed,
+      col("user_id"), col("id_a"), col("id_b"))(
       Some(TemporalQueries.rangeJoinSql), bench = true,
-      benchFn = Some(rangeBucketedRaw),
       benchNote = Some("sorted-bucketed twin of x_range_join: the " +
         "equi-bucket self-join co-locates on the shared layout, zero " +
         "exchange")),

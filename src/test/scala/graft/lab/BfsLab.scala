@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev A/B: per-level anti-join BFS (shipped) vs hop-capped union-min
@@ -9,16 +9,9 @@ import org.apache.spark.sql.functions._
 object BfsLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-bfslab", sfDir = Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.get("BFSLAB_STATS").contains("1")) {
       graft.core.TableStats.analyze(spark, "/root/testdata/sf0.001")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch harness (not registered): per-job decomposition of the
   * x_dedup_components contraction loop — which call sites the ~50
   * sf0.1 jobs belong to, so the exchange-count cut can be verified
@@ -10,18 +8,8 @@ object CcLab {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(sfDir, cpus.toInt)
-          .toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-cclab", sfDir = Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
     graft.core.TableStats.analyze(spark, sfDir)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-11 sweep (verdict item 5): trade recall-irrelevant containment
   * candidates for time at sf10 by lowering the hot-shingle df cap.
   *
@@ -17,19 +15,8 @@ object ContainmentSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "target/sf10"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(dir, cpus.toInt)
-          .toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-csweep", sfDir = Some(dir))
     spark.sparkContext.setLogLevel("ERROR")
     graft.core.TableStats.analyze(spark, dir)
 

@@ -16,17 +16,8 @@ object FloorSweep {
   private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   private def session(extra: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-floorsweep", extraConf = extra)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

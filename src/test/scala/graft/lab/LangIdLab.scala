@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextF
@@ -9,16 +8,11 @@ import graft.functions.TextF
   * come from — row counts, partition widths, per-stage split. */
 object LangIdLab {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-langidlab", sfDir = Some(dir))
+    spark.sparkContext.setLogLevel("ERROR")
     val d = graft.parallelScan(spark,
         graft.tbl(spark, dir, "documents").select(col("doc_id"), col("lang"),
           col("text")))

@@ -1,33 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: cold/warm wall-clock of registered queries (args = query
   * names; default = bench set) at SPARK_GRAFT_SF_DIR. The cold−warm gap
   * is JVM JIT + codegen compile; warm is steady-state throughput. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-sized initial shuffle partitions — rationale + A/B numbers
-      // on GraftSession.initialShufflePartitions
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialShufflePartitions(sfDir,
-          32).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-profile", sfDir = Some(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchNames
     names.foreach { name =>
-      // time the same plan Bench times (sort-free benchFn when present) —
-      // resolved through defs.benched so non-bench queries with a
-      // registered raw variant profile that variant too
+      // time the same plan Bench times — resolved through defs.benched
+      // so non-bench sort-only queries profile their unsorted plan too
       SparkEntry.defs.get(name).map(_.benched) match {
         case None => println(s"[profile] unknown query: $name")
         case Some(fn) =>

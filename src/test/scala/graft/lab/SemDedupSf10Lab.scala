@@ -1,19 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (round 16): full-query timing of scaled-K semdedup at
   * sf10 (the argmin-pack + single width-restore plan). */
 object SemDedupSf10Lab {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.GraftSession.local(cores = cpus.toInt,
+      appName = "graft-semdedup-sf10", sfDir = Some("target/sf10"))
     spark.sparkContext.setLogLevel("ERROR")
     (1 to 3).foreach { p =>
       val t0 = System.nanoTime()
