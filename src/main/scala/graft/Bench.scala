@@ -125,11 +125,7 @@ object Bench {
     // identical plans). A warm-up failure (e.g. the warm-up fixture
     // absent) must not mark the query failed — only the timed runs at the
     // target SF decide that.
-    val warmNames =
-      if (sys.env.get("SPARK_GRAFT_WARM_ALL").contains("1"))
-        SparkEntry.benchNames.filter(SparkEntry.benchQueries.contains)
-      else names
-    warmNames.foreach { name =>
+    names.foreach { name =>
       try SparkEntry.benchQueries(name)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -157,19 +153,11 @@ object Bench {
       spark.catalog.clearCache()
       // blocking (round 13): with blocking=false the block-removal work
       // is enqueued async and lands INSIDE the next timed sample
-      val blockingUnpersist =
-        !sys.env.get("SPARK_GRAFT_BLOCKING_UNPERSIST").contains("0")
       spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = blockingUnpersist))
+        .foreach(_.unpersist(blocking = true))
       System.gc()
     }
 
-    val debug = sys.env.get("SPARK_GRAFT_BENCH_DEBUG").contains("1")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     // Sample schedule (round 13): (pass, name) visit order.
     //  - interleave: pass 1 runs every query once, then pass 2, … — the
     //    round-7 protocol (one host-steal window hits at most one sample
@@ -211,15 +199,10 @@ object Bench {
     for ((pass, name) <- visits if !failed.contains(name)) {
       cleanSlate()
       try {
-        val gc0 = if (debug) gcMillis else 0L
         val t0 = System.nanoTime()
-        val df = SparkEntry.benchQueries(name)(spark, sfDir)
-        val tPlan = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
+        SparkEntry.benchQueries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        if (debug) System.err.println(
-          f"[benchdbg] $name%-26s pass$pass $dt%.3f s " +
-            f"build ${(tPlan - t0) / 1e9}%.3f gc ${(gcMillis - gc0) / 1e3}%.3f")
         best.updateWith(name)(prev => Some(prev.fold(dt)(math.min(_, dt))))
       } catch {
         case e: Throwable =>

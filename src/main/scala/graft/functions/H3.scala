@@ -173,36 +173,6 @@ object H3 {
     normI((p >>> 32) - 1073741824L, (p & 0xFFFFFFFFL) - 1073741824L, 0L)
   }
 
-  /** Aperture-7 up-aggregation, counter-clockwise variant (child grid →
-    * parent grid for Class III child resolutions). */
-  @inline private def upAp7(i0: Long, j0: Long, k0: Long): (Long, Long, Long) = {
-    val i = (i0 - k0).toDouble
-    val j = (j0 - k0).toDouble
-    normI(floor((3.0 * i - j) / 7.0 + 0.5).toLong,
-      floor((i + 2.0 * j) / 7.0 + 0.5).toLong, 0L)
-  }
-
-  /** Aperture-7 up-aggregation, clockwise variant (Class II). */
-  @inline private def upAp7r(i0: Long, j0: Long, k0: Long): (Long, Long, Long) = {
-    val i = (i0 - k0).toDouble
-    val j = (j0 - k0).toDouble
-    normI(floor((2.0 * i + j) / 7.0 + 0.5).toLong,
-      floor((3.0 * j - i) / 7.0 + 0.5).toLong, 0L)
-  }
-
-  /** Aperture-7 down-scalings (parent center in child grid). */
-  @inline private def downAp7(i: Long, j: Long, k: Long): (Long, Long, Long) =
-    normI(3 * i + 1 * j, 3 * j + 1 * k, 1 * i + 3 * k)
-
-  @inline private def downAp7r(i: Long, j: Long, k: Long): (Long, Long, Long) =
-    normI(3 * i + 1 * k, 1 * i + 3 * j, 1 * j + 3 * k)
-
-  @inline private def unitIjkToDigit(i: Long, j: Long, k: Long): Int = {
-    require(i >= 0 && i <= 1 && j >= 0 && j <= 1 && k >= 0 && k <= 1,
-      s"non-unit ijk ($i,$j,$k)")
-    (4 * i + 2 * j + k).toInt
-  }
-
   // ------------------------------------------------------------------
   // Digit rotations in index space. CCW cycle: I→IJ→J→JK→K→IK→I.
   // ------------------------------------------------------------------
@@ -507,8 +477,8 @@ object H3 {
           // bearing quantization yields the INVERSE rotation. The
           // digit-level cross-chart consistency law (for edge isometry
           // rotation c: rot_F − rot_G ≡ +c (mod 6), proven via the
-          // aperture-7/isometry commutation and verified exhaustively
-          // by probeCoordConsistency) picks the sign: with the raw
+          // aperture-7/isometry commutation and pinned exhaustively at
+          // res 0–3 by countHexIsoMismatches) picks the sign: with the raw
           // nRot every c∈{1,5} edge pair violates it by 2c, with the
           // negation all pairs satisfy it. c=3 edges (280 of 420 slot
           // pairs) are sign-blind, which is how the raw sign survived
@@ -531,55 +501,17 @@ object H3 {
   /** geo (radians) → (face, res-0 i/j/k, raw index). The raw index has
     * mode/res/digits set with digits in `face`'s own grid orientation;
     * base-cell bits are still all-1 and no rotation has been applied.
-    *
-    * Results are returned through [[RawOut]] to keep the scan hot path
-    * allocation-free: the digit loop below runs `res` iterations per
-    * row and is written against primitive locals only (the tuple-based
-    * helper algebra above is reserved for derivation-time use). */
-  private final class RawOut {
-    var face: Int = 0
-    var i: Long = 0L; var j: Long = 0L; var k: Long = 0L
-    var h: Long = 0L
-    // res-N chart-local lattice coords of the landed cell (pre-digit
-    // aggregation) — the consensus path unprojects these to score a
-    // candidate chart by its own lattice-center distance
-    var li: Long = 0L; var lj: Long = 0L; var lk: Long = 0L
-  }
-  private val rawOutTL =
-    ThreadLocal.withInitial[RawOut](() => new RawOut)
-
-  private def rawIndexInto(latR: Double, lngR: Double, res: Int,
-      out: RawOut): Unit =
-    rawIndexOnFace(latR, lngR, res, nearestFace(latR, lngR), out)
-
-  /** [[rawIndexInto]] with the chart face given — the consensus band
-    * in [[latLngToCell]] trials co-near charts explicitly. */
-  private def rawIndexOnFace(latR: Double, lngR: Double, res: Int,
-      faceArg: Int, out: RawOut): Unit = {
-    // geoToHex2d, inlined projection on the given face
-    val face = faceArg
-    val cosLat = cos(latR)
-    val dot = max(-1.0, min(1.0,
-      cosLat * cos(lngR) * FaceX(face) +
-        cosLat * sin(lngR) * FaceY(face) + sin(latR) * FaceZ(face)))
-    val rAng = acos(dot)
-    var x = 0.0; var y = 0.0
-    if (rAng >= 1e-15) {
-      val az = geoAzimuth(FaceLat(face), FaceLng(face), latR, lngR)
-      var theta = posAngle(FaceAz0(face) - posAngle(az))
-      if ((res & 1) == 1) theta = posAngle(theta - Ap7Rot) // Class III
-      var rr = tan(rAng) / Res0UGnomonic
-      var n = 0
-      while (n < res) { rr *= Sqrt7; n += 1 }
-      x = rr * cos(theta); y = rr * sin(theta)
-    }
+    * Used by the pentagon rotation search at class init, which needs
+    * the index before the table finishing. */
+  private def rawIndex(latR: Double, lngR: Double,
+      res: Int): (Int, Long, Long, Long, Long) = {
+    val face = nearestFace(latR, lngR)
     // nearest hex center (4-corner exact rounding), normalized ijk
-    val packed = hex2dToAxialPacked(x, y)
+    val packed = projectRound(latR, lngR, res, face)
     var i = (packed >>> 32) - 1073741824L
     var j = (packed & 0xFFFFFFFFL) - 1073741824L
     var k = 0L
     var m = min(i, min(j, k)); i -= m; j -= m; k -= m
-    out.li = i; out.lj = j; out.lk = k
     // index skeleton: mode 1, res, all digits 7
     var h = (1L << 59) | (res.toLong << 52) | ((1L << 45) - 1)
     var r = res
@@ -615,14 +547,7 @@ object H3 {
     }
     require(i >= 0 && i <= 2 && j >= 0 && j <= 2 && k >= 0 && k <= 2,
       s"res-0 coords out of range: ($i,$j,$k) face $face")
-    out.face = face; out.i = i; out.j = j; out.k = k; out.h = h
-  }
-
-  private def rawIndex(latR: Double, lngR: Double,
-      res: Int): (Int, Long, Long, Long, Long) = {
-    val o = rawOutTL.get()
-    rawIndexInto(latR, lngR, res, o)
-    (o.face, o.i, o.j, o.k, o.h)
+    (face, i, j, k, h)
   }
 
   /** Apply base-cell number + orientation to a raw index. Parameterized
@@ -803,17 +728,6 @@ object H3 {
         }
       }
       rec(0)
-      if (System.getProperty("graft.h3.debug") != null) {
-        println(s"pent $bc home=$homeFace faces=${faces.toList} " +
-          s"edges=${edges.map { case (e, ps) => s"$e:${ps.size}" }.toList}")
-        for (sv <- survivors.take(8)) {
-          val a = (0 to otherFaces.size).map { d =>
-            val f = if (d == 0) homeFace else otherFaces(d - 1)
-            s"$f->${combosOf(f)(sv(d))}"
-          }
-          println(s"  survivor: ${a.mkString(" ")}")
-        }
-      }
       require(survivors.nonEmpty, s"pentagon $bc: fan CSP has no solution")
       // rots must be pinned uniquely; cw flags may be unconstrained
       for (d <- 0 to otherFaces.size) {
@@ -1042,33 +956,8 @@ object H3 {
   // ------------------------------------------------------------------
   // Public API
   // ------------------------------------------------------------------
-  /** Cell pitch scale per res, radians (≈4 face-center pitches) —
-    * retained for the inverse's surrounded-center probe radius. */
-  private val BandByRes: Array[Double] =
-    Array.tabulate(MaxRes + 1)(r => 4.0 * atan(Res0UGnomonic) /
-      math.pow(Sqrt7, r))
-
-  /** (lat°, lng°, res) → H3 index (64-bit) — the h3lib `_geoToH3`
-    * shape, made purely lattice-combinatorial (round 12): project
-    * through the NEAREST face's gnomonic chart, round to the res-N
-    * lattice, and assemble the index in the chart that OWNS the
-    * rounded coordinate. Rounding can land up to half a pitch outside
-    * the nearest face's triangular region (the boundary sliver); such
-    * coordinates are first carried across the shared edge by the
-    * derived face-neighbor isometry ([[overageNormalize]]) — where
-    * the two charts' lattices have drifted apart by far less than
-    * half a pitch, so the label transfer is exact. Identity is then
-    * combinatorial: a cell's region is exactly the set of points
-    * whose rounding normalizes to its coordinate in its owning chart,
-    * so regions are connected, flanking charts cannot disagree about
-    * a cell, and ghost ids (digit strings assembled through a chart
-    * evaluated deep past its own face — the round-11 consensus
-    * scheme's residual failure mode at coarse res, where it
-    * fragmented regions and emitted non-invertible ids) cannot be
-    * produced at all. Also strictly faster: one chart projection per
-    * point instead of up to 20 consensus trials near boundaries. */
   /** Gnomonic projection + exact 4-corner lattice rounding through
-    * `face`'s chart (the geometric half of rawIndexOnFace); result
+    * `face`'s chart (the geometric half of [[rawIndex]]); result
     * packed as [[hex2dToAxialPacked]]. */
   @inline private def projectRound(latR: Double, lngR: Double, res: Int,
       face: Int): Long = {
@@ -1090,6 +979,25 @@ object H3 {
     hex2dToAxialPacked(x, y)
   }
 
+  /** (lat°, lng°, res) → H3 index (64-bit) — the h3lib `_geoToH3`
+    * shape, made purely lattice-combinatorial (round 12): project
+    * through the NEAREST face's gnomonic chart, round to the res-N
+    * lattice, and assemble the index in the chart that OWNS the
+    * rounded coordinate. Rounding can land up to half a pitch outside
+    * the nearest face's triangular region (the boundary sliver); such
+    * coordinates are first carried across the shared edge by the
+    * derived face-neighbor isometry ([[overageNormalize]]) — where
+    * the two charts' lattices have drifted apart by far less than
+    * half a pitch, so the label transfer is exact. Identity is then
+    * combinatorial: a cell's region is exactly the set of points
+    * whose rounding normalizes to its coordinate in its owning chart,
+    * so regions are connected, flanking charts cannot disagree about
+    * a cell, and ghost ids (digit strings assembled through a chart
+    * evaluated deep past its own face — the round-11 consensus
+    * scheme's residual failure mode at coarse res, where it
+    * fragmented regions and emitted non-invertible ids) cannot be
+    * produced at all. Also strictly faster: one chart projection per
+    * point instead of up to 20 consensus trials near boundaries. */
   def latLngToCell(latDeg: Double, lngDeg: Double, res: Int): Long = {
     require(res >= 0 && res <= MaxRes, s"resolution $res out of [0,15]")
     val latR = toRadians(latDeg); val lngR = toRadians(lngDeg)
@@ -1103,16 +1011,6 @@ object H3 {
       (pk & 0x1FFFFFFL) - 16777216L, 0L, res)
     require(h >= 0, s"unresolvable coordinate ($latDeg, $lngDeg) res $res")
     h
-  }
-
-  @inline private def finishRaw(o: RawOut): Long = {
-    val idx = tabIdx(o.face, o.i, o.j, o.k)
-    val bc = TabBc(idx)
-    require(bc >= 0, s"unmapped base-cell coord (${o.face},${o.i},${o.j},${o.k})")
-    val rot = TabRot(idx)
-    require(rot >= 0,
-      s"unresolved pentagon appearance (${o.face},${o.i},${o.j},${o.k}) for cell $bc")
-    finishWith(o.h, bc, rot, PentCwOffset(bc * 32 + o.face))
   }
 
   /** (lat°, lng°, res) → canonical lowercase 15-hex-digit cell id. */
@@ -1171,7 +1069,7 @@ object H3 {
 
   /** Descend a res-0 ijk down `res` aperture-7 steps, applying the raw
     * (chart-local) digits of `h` — the exact inverse of the digit
-    * up-aggregation loop in [[rawIndexInto]]: at each step the parent
+    * up-aggregation loop in [[rawIndex]]: at each step the parent
     * is down-scaled into the child grid (Class III ccw at odd res,
     * Class II cw at even) and the unit digit vector added. */
   private def descendDigits(i0: Long, j0: Long, k0: Long, h: Long,
@@ -1329,20 +1227,17 @@ object H3 {
   // ------------------------------------------------------------------
   // Grid traversal: ring-1 neighbors and k-disks (gridDisk)
   // ------------------------------------------------------------------
-  /** Grid traversal internals. Since round 12 the primary path is
-    * [[ringCanonical]] — pure integer stepping in the owning chart
-    * with overage normalization across the derived face-neighbor
-    * isometries, exact by the spec-pinned cross-chart consistency law
-    * (`countHexIsoMismatches == 0`). The geometric multi-appearance
-    * path below ([[ringInteger]] + the symmetry closure in
-    * [[gridRing1]]) is retained as the fallback for the cases the
-    * canonical path declines: pentagon cells (whose 5-sector digit
-    * quotient the hexagonal isometry does not cover) and any anchor
-    * that fails its canonical re-assembly check. */
+  /** Grid traversal internals. Every traversal — [[gridRing1]],
+    * [[gridDisk]], polyfill and [[gridDistance]]'s BFS arm — steps in
+    * pure integers in the cell's owning chart, with overage
+    * normalization across the derived face-neighbor isometries; the
+    * steps are exact by the spec-pinned cross-chart consistency law
+    * (`countHexIsoMismatches == 0`) and, inside pentagon base cells,
+    * by the pentagon-quotient orbit law (`pentIsoOrbitStats`). */
   /** Assemble the canonical cell id owning chart-local lattice
     * coordinate (i, j, k) at `res` on `face` — PURE INTEGER aperture-7
     * aggregation through the canonical tables (the geometric half of
-    * [[rawIndexOnFace]] removed). Returns -1 when the res-0
+    * [[rawIndex]] removed). Returns -1 when the res-0
     * aggregation falls outside the face's 27-slot coverage (caller
     * tries another appearance). */
   private def assembleFromChart(face: Int, li: Long, lj: Long, lk: Long,
@@ -1385,161 +1280,28 @@ object H3 {
     finishWith(h, bc, rot, PentCwOffset(bc * 32 + face))
   }
 
-  /** The integer-verified neighbor pass of [[gridRing1]]: candidates
-    * assembled in lattice space and kept only when the stepped
-    * coordinate's unprojection coincides with the assembled cell's
-    * true center. Complete for all-interior neighborhoods; a face
-    * crossing the derived tables cannot stitch leaves a direction
-    * empty (the symmetry closure in [[gridRing1]] fills it). */
-  private def ringInteger(h: Long): Array[Long] = {
-    val res = getResolution(h)
-    // validates the index (throws on malformed input) and yields the
-    // exact center for the geometric verification below
-    val (fCanon, cI, cJ, cK, hLatD, hLngD) = resolveChart(h)
-    val hLatR = toRadians(hLatD); val hLngR = toRadians(hLngD)
-    val hx = cos(hLatR) * cos(hLngR)
-    val hy = cos(hLatR) * sin(hLngR)
-    val hz = sin(hLatR)
-    val bc = getBaseCell(h)
-    val pent = IsPent(bc)
-    val out = new Array[Long](12)
-    var n = 0
-    def add(c: Long): Unit = if (c >= 0 && c != h) {
-      var seen = false
-      var s = 0
-      while (s < n) { if (out(s) == c) seen = true; s += 1 }
-      if (!seen) { out(n) = c; n += 1 }
-    }
-    @inline def ang(aLatR: Double, aLngR: Double,
-        bLatR: Double, bLngR: Double): Double = {
-      val d = cos(aLatR) * cos(aLngR) * cos(bLatR) * cos(bLngR) +
-        cos(aLatR) * sin(aLngR) * cos(bLatR) * sin(bLngR) +
-        sin(aLatR) * sin(bLatR)
-      acos(max(-1.0, min(1.0, d)))
-    }
-    // For every appearance of the base cell: recover h's chart-local
-    // lattice coordinate (the integer identity assemble-then-descend
-    // sanity-checks the bookkeeping and selects the valid pentagon
-    // leading-K pre-image), assemble the six unit-step coordinates
-    // back to canonical ids through the same tables, then VERIFY each
-    // candidate geometrically: the stepped coordinate's unprojection
-    // must coincide with the assembled cell's true center. The integer
-    // identity alone is vacuous off-face (a digit string descended
-    // through the wrong anchor still round-trips), and a chart
-    // evaluated deep past its face assembles lattice-wrong GHOST ids
-    // whose true centers sit several pitches away - the 0.4-pitch
-    // gate (true neighbors measure 0 on-face and at most ~0.3 pitch
-    // for a one-cell face crossing) separates the two regimes
-    // decisively. The same gate applied to the appearance's own
-    // coordinate of h keeps mis-anchored appearances from stepping at
-    // all.
-    val apps = BcApps(bc)
-    var a = 0
-    while (a < apps.length) {
-      val (f, i0, j0, k0, rot) = apps(a)
-      if (rot >= 0) {
-        val u =
-          if (pent) unrotatePent(h, rot)
-          else {
-            var x = h; var m = 0
-            while (m < rot) { x = rotate60(x, CwDigit); m += 1 }
-            x
-          }
-        var c = 0
-        val nCands = if (pent) 2 else 1
-        while (c < nCands) {
-          var raw = 0L
-          var valid = false
-          if (c == 0) { raw = u; valid = !pent || leadingNonZeroDigit(u) != 1 }
-          else {
-            val t = if (PentCwOffset(bc * 32 + f)) CcwDigit else CwDigit
-            raw = rotate60(u, t)
-            valid = leadingNonZeroDigit(raw) == 1
-          }
-          if (valid) {
-            val (ri, rj, rk) = descendDigits(i0, j0, k0, raw, res)
-            if (assembleFromChart(f, ri, rj, rk, res) == h) {
-              val (ax, ay) = ijkToHex2d(ri, rj, rk)
-              val (aLatR, aLngR) = hex2dToGeo(f, ax, ay, res)
-              val anchorDist = ang(aLatR, aLngR, hLatR, hLngR)
-              var d = 1
-              while (d <= 6) {
-                val si = ri + ((d >> 2) & 1)
-                val sj = rj + ((d >> 1) & 1)
-                val sk = rk + (d & 1)
-                val (sx, sy) = ijkToHex2d(si, sj, sk)
-                val (sLatR, sLngR) = hex2dToGeo(f, sx, sy, res)
-                val localPitch = ang(sLatR, sLngR, aLatR, aLngR)
-                if (anchorDist <= 0.25 * localPitch) {
-                  // geometric acceptance gate shared by both routes,
-                  // against the INDEPENDENT reference (the stepped
-                  // coordinate's unprojection through h's own verified
-                  // chart — accurate to the one-cell chart drift,
-                  // ≤ ~0.3 pitch): a candidate's true center must
-                  // coincide with it (ghosts measure several pitches
-                  // off); a deep ghost can even be NON-INVERTIBLE —
-                  // that too is a reject. The overage candidate is NOT
-                  // checked against its own chart's unprojection: that
-                  // would be circular (any assembled id trivially sits
-                  // at its own coordinate's unprojection).
-                  @inline def verifyAdd(nb: Long): Unit =
-                    if (nb >= 0 && nb != h) {
-                      try {
-                        val (nLatD, nLngD) = cellToLatLng(nb)
-                        if (ang(sLatR, sLngR, toRadians(nLatD),
-                            toRadians(nLngD)) <= 0.4 * localPitch)
-                          add(nb)
-                      } catch {
-                        case _: IllegalArgumentException => ()
-                      }
-                    }
-                  verifyAdd(assembleFromChart(f, si, sj, sk, res))
-                  // overage route (round 12): when the stepped
-                  // coordinate leaves this face's region, re-anchor it
-                  // through the derived face-neighbor isometry and
-                  // assemble in the chart that OWNS the region — the
-                  // chart whose assembly matches the forward identity
-                  // there. Closes the contested-zone directions the
-                  // home-chart continuation assembles as ghosts.
-                  val pk = overageNormalize(f, si - sk, sj - sk, res)
-                  val nf = (pk >>> 50).toInt
-                  if (nf != f) {
-                    val na = ((pk >> 25) & 0x1FFFFFFL) - 16777216L
-                    val nbAx = (pk & 0x1FFFFFFL) - 16777216L
-                    verifyAdd(assembleFromChart(nf, na, nbAx, 0L, res))
-                  }
-                }
-                d += 1
-              }
-            }
-          }
-          c += 1
-        }
-      }
-      a += 1
-    }
-    java.util.Arrays.sort(out, 0, n) // res <= 15 indexes have bit 63 = 0
-    java.util.Arrays.copyOf(out, n)
-  }
-
-  /** Canonical integer ring (round 12): anchor `h` at its
+  /** The ring-1 neighbors of `h`, sorted: anchor `h` at its
     * overage-normalized coordinate in its OWNING chart, take the six
     * unit lattice steps, normalize each stepped coordinate across the
     * face-neighbor isometries, and assemble it in ITS owning chart.
     * With forward identity defined the same way ([[latLngToCell]]),
     * each step is exact adjacency by construction — no geometric
-    * tolerance anywhere. Returns null when the canonical anchor does
-    * not re-assemble to `h` (caller falls back to the geometric
-    * multi-appearance path); a pentagon's six steps must dedupe to
-    * its five true neighbors or the caller likewise falls back. */
-  private def ringCanonical(h: Long): Array[Long] = {
+    * tolerance anywhere. A pentagon's six steps dedupe to its five
+    * neighbors.
+    * Throws `IllegalArgumentException` on a malformed index and
+    * `IllegalStateException` if the anchor does not re-assemble to `h`
+    * or the ring is not 6 cells (5 at a pentagon) — `H3Spec` checks
+    * every cell at res 0–3 and every pentagon's 3-disk at res 0–15. */
+  def gridRing1(h: Long): Array[Long] = {
     val res = getResolution(h)
     val (f, ci, cj, ck, _, _) = resolveChart(h) // validates h; throws on bad input
     val pk0 = overageNormalize(f, ci - ck, cj - ck, res)
     val f0 = (pk0 >>> 50).toInt
     val a0 = ((pk0 >> 25) & 0x1FFFFFFL) - 16777216L
     val b0 = (pk0 & 0x1FFFFFFL) - 16777216L
-    if (assembleFromChart(f0, a0, b0, 0L, res) != h) return null
+    if (assembleFromChart(f0, a0, b0, 0L, res) != h)
+      throw new IllegalStateException(
+        f"gridRing1: 0x$h%x does not re-assemble in its owning chart")
     val out = new Array[Long](6)
     var n = 0
     var d = 1
@@ -1559,37 +1321,12 @@ object H3 {
       }
       d += 1
     }
+    val expected = if (isPentagon(h)) 5 else 6
+    if (n != expected)
+      throw new IllegalStateException(
+        f"gridRing1: 0x$h%x has $n neighbors, expected $expected")
     java.util.Arrays.sort(out, 0, n)
     java.util.Arrays.copyOf(out, n)
-  }
-
-  def gridRing1(h: Long): Array[Long] = {
-    val expected = if (isPentagon(h)) 5 else 6
-    val fast = ringCanonical(h)
-    if (fast != null && fast.length == expected) return fast
-    val base = ringInteger(h)
-    if (base.length >= expected) return base
-    // Symmetry closure: a face crossing the derived tables cannot
-    // stitch from h's side can still be proven from the OTHER side —
-    // the missing neighbor is adjacent to two already-found ring
-    // members, so it appears in their integer rings, and its own
-    // integer ring containing h is a full verified adjacency witness.
-    var out = base
-    var i = 0
-    while (i < base.length && out.length < expected) {
-      val around = ringInteger(base(i))
-      var j = 0
-      while (j < around.length && out.length < expected) {
-        val cand = around(j)
-        if (cand != h && !out.contains(cand) &&
-            ringInteger(cand).contains(h))
-          out = out :+ cand
-        j += 1
-      }
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    out
   }
 
   /** Is `h` itself a pentagon cell (5 neighbors)? Distinct from
@@ -1628,69 +1365,6 @@ object H3 {
   def gridDiskHex(hex: String, k: Int): Array[String] =
     gridDisk(java.lang.Long.parseUnsignedLong(hex, 16), k)
       .map(c => f"$c%x")
-
-  /** Off-edge isometry probe for [[graft.functions.H3IsoDbg]]: sample
-    * points just INSIDE the neighbor face across edge `e` of face `f`,
-    * compare the neighbor chart's direct lattice rounding with the
-    * isometry image of the home chart's rounding. Returns
-    * (neighborFace, (samples, mismatches, first few axial offsets)). */
-  private[functions] def probeEdgeIso(f: Int, e: Int,
-      res: Int): (Int, (Int, Int, List[(Long, Long)])) = {
-    val g = EdgeFace(f)(e)
-    val (a1, b1) = FaceVertAxial(e)
-    val (a2, b2) = FaceVertAxial((e + 1) % 3)
-    val (vla1, vlo1) = hex2dToGeoRes0(f, a1.toDouble - 0.5 * b1, b1 * Sin60)
-    val (vla2, vlo2) = hex2dToGeoRes0(f, a2.toDouble - 0.5 * b2, b2 * Sin60)
-    val v1 = Array(cos(vla1) * cos(vlo1), cos(vla1) * sin(vlo1), sin(vla1))
-    val v2 = Array(cos(vla2) * cos(vlo2), cos(vla2) * sin(vlo2), sin(vla2))
-    val gC = Array(FaceX(g), FaceY(g), FaceZ(g))
-    val pitch = atan(Res0UGnomonic) / math.pow(Sqrt7, res)
-    var total = 0
-    var mis = 0
-    var offs = List.empty[(Long, Long)]
-    for (tI <- 1 to 19; dI <- 1 to 3) {
-      val t = tI / 20.0
-      // point on the edge chord, pushed toward G's center by dI·0.4
-      // pitch, renormalized to the sphere
-      val push = dI * 0.4 * pitch
-      val ex = v1(0) * (1 - t) + v2(0) * t
-      val ey = v1(1) * (1 - t) + v2(1) * t
-      val ez = v1(2) * (1 - t) + v2(2) * t
-      val en = sqrt(ex * ex + ey * ey + ez * ez)
-      var px = ex / en; var py = ey / en; var pz = ez / en
-      // tangential direction toward G's center
-      val dotG = px * gC(0) + py * gC(1) + pz * gC(2)
-      var tx = gC(0) - dotG * px; var ty = gC(1) - dotG * py
-      var tz = gC(2) - dotG * pz
-      val tn = sqrt(tx * tx + ty * ty + tz * tz)
-      tx /= tn; ty /= tn; tz /= tn
-      px += tx * push; py += ty * push; pz += tz * push
-      val pn = sqrt(px * px + py * py + pz * pz)
-      px /= pn; py /= pn; pz /= pn
-      val latR = asin(max(-1.0, min(1.0, pz)))
-      val lngR = atan2(py, px)
-      // direct: neighbor-chart rounding
-      val pg = projectRound(latR, lngR, res, g)
-      val ga = (pg >>> 32) - 1073741824L
-      val gb = (pg & 0xFFFFFFFFL) - 1073741824L
-      // home-chart rounding + isometry
-      val pf = projectRound(latR, lngR, res, f)
-      val fa = (pf >>> 32) - 1073741824L
-      val fb = (pf & 0xFFFFFFFFL) - 1073741824L
-      val c = EdgeRot(f)(e)(res)
-      var xa = fa; var xb = fb
-      var k = 0
-      while (k < c) { val tt = xa - xb; xb = xa; xa = tt; k += 1 }
-      xa += EdgeTA(f)(e)(res)
-      xb += EdgeTB(f)(e)(res)
-      total += 1
-      if (xa != ga || xb != gb) {
-        mis += 1
-        if (offs.size < 5) offs ::= ((xa - ga, xb - gb))
-      }
-    }
-    (g, (total, mis, offs))
-  }
 
   /** Count of HEXAGON cross-chart assembly disagreements at `res` —
     * the spec-pinned round-12 consistency invariant (must be 0; see
@@ -1782,98 +1456,6 @@ object H3 {
       }
     }
     (pairs, outOfOrbit, steps.toMap)
-  }
-
-  /** Coordinate-level label-consistency probe: for every edge and a
-    * dense coordinate patch, compare assembleF(X) with
-    * assembleG(iso_r(X)) wherever both are defined. */
-  private[functions] def probeCoordConsistency(res: Int): Unit = {
-    var both = 0
-    var mis = 0
-    val ex = scala.collection.mutable.ArrayBuffer.empty[String]
-    val lim = TriW(res).map(w => max(abs(w._1), abs(w._2))).max + 4
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(res)
-      var a = -lim
-      while (a <= lim) {
-        var b = -lim
-        while (b <= lim) {
-          val hF = assembleFromChart(f, a, b, 0L, res)
-          if (hF >= 0) {
-            var xa = a; var xb = b
-            var n = 0
-            while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-            xa += EdgeTA(f)(e)(res)
-            xb += EdgeTB(f)(e)(res)
-            val hG = assembleFromChart(g, xa, xb, 0L, res)
-            if (hG >= 0) {
-              both += 1
-              if (hF != hG) {
-                mis += 1
-                if (!IsPent(getBaseCell(hF)) && !IsPent(getBaseCell(hG)))
-                  ex += f"HEX MISMATCH f=$f e=$e g=$g X=($a,$b) " +
-                    f"iso=($xa,$xb) hF=0x$hF%x hG=0x$hG%x"
-                else if (ex.size < 4)
-                  ex += f"(pent) f=$f e=$e X=($a,$b) hF=0x$hF%x hG=0x$hG%x"
-              }
-            }
-          }
-          b += 1
-        }
-        a += 1
-      }
-    }
-    println(s"res $res: $both coords defined both sides, $mis mismatches")
-    ex.foreach(s => println("  " + s))
-  }
-
-  /** Table-consistency probe for [[graft.functions.H3TabDbg]]: for
-    * each edge, map every res-0 slot through the res-0 isometry and
-    * compare base cells and rotation deltas. */
-  private[functions] def probeTableConsistency(): Unit = {
-    var bcMis = 0
-    var slots = 0
-    // delta histogram keyed (c, rotF - rotG mod 6) for hexagon slots
-    val hist = scala.collection.mutable.Map.empty[(Int, Int), Int]
-    val mism = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (f <- 0 until 20; e <- 0 until 3) {
-      val g = EdgeFace(f)(e)
-      val c = EdgeRot(f)(e)(0)
-      for (i <- 0 to 2; j <- 0 to 2; k <- 0 to 2
-           if TabBc(tabIdx(f, i, j, k)) >= 0) {
-        val a0 = i.toLong - k; val b0 = j.toLong - k
-        var xa = a0; var xb = b0
-        var n = 0
-        while (n < c) { val t = xa - xb; xb = xa; xa = t; n += 1 }
-        xa += EdgeTA(f)(e)(0)
-        xb += EdgeTB(f)(e)(0)
-        val m = min(xa, min(xb, 0L))
-        val (gi, gj, gk) = (xa - m, xb - m, -m)
-        if (gi <= 2 && gj <= 2 && gk <= 2 &&
-            TabBc(tabIdx(g, gi, gj, gk)) >= 0) {
-          slots += 1
-          val bcF = TabBc(tabIdx(f, i, j, k))
-          val bcG = TabBc(tabIdx(g, gi, gj, gk))
-          if (bcF != bcG) {
-            bcMis += 1
-            if (mism.size < 20)
-              mism += s"bc mismatch f=$f($i,$j,$k)=$bcF vs g=$g($gi,$gj,$gk)=$bcG"
-          } else if (!IsPent(bcF)) {
-            val rF = TabRot(tabIdx(f, i, j, k))
-            val rG = TabRot(tabIdx(g, gi, gj, gk))
-            val d = ((rF - rG) % 6 + 6) % 6
-            hist((c, d)) = hist.getOrElse((c, d), 0) + 1
-          }
-        }
-      }
-    }
-    println(s"slots mapped in-table: $slots, bc mismatches: $bcMis")
-    mism.foreach(s => println("  " + s))
-    println("rot delta histogram (edgeRotC, (rotF-rotG) mod 6) -> count:")
-    hist.toSeq.sortBy(x => (x._1._1, x._1._2)).foreach { case ((c, d), n) =>
-      println(f"  c=$c d=$d : $n")
-    }
   }
 
   // ------------------------------------------------------------------
@@ -2052,16 +1634,14 @@ object H3 {
   // to five). Every generating cell reaches the identical (face, a, b)
   // integers, so shared corners are bit-canonical BY CONSTRUCTION —
   // no ring-neighbor search, no float face-ownership ties (the round-13
-  // ADVICE), and no home-chart fallback set (the round-13 7/14/24
-  // residual is eliminated, spec-pinned at 0).
+  // ADVICE), and no home-chart fallback.
   //
   // Remaining documented divergence vs h3lib: the PLAIN form inserts no
   // edge-crossing DISTORTION vertices (h3lib emits up to 10 vertices
   // for face-straddling hexagons; this surface always emits the 6 true
   // corners). The full-parity form with exact distortion vertices is
   // [[cellToBoundaryFull]]. Pentagon corners adopt their flanking
-  // hexagons' substrate-exact corners (always resolved since this
-  // round — the 2/0/9/0 skeleton residual is eliminated too).
+  // hexagons' substrate-exact corners.
   // ------------------------------------------------------------------
 
   /** CCW unit neighbor directions in axial (a,b) coords — see
@@ -2073,17 +1653,9 @@ object H3 {
   /** h3lib `cellToBoundary`: the cell's polygon vertices as
     * (latDeg, lngDeg), in ring order, without repeating the first
     * vertex — 6 for hexagons, 5 for pentagon cells. */
-  def cellToBoundary(h: Long): Array[(Double, Double)] =
-    cellToBoundaryResolved(h)._1
-
-  /** [[cellToBoundary]] plus a (historical) fallback bitmask — ALWAYS 0
-    * since round 14: every corner resolves to its owning chart through
-    * the exact substrate isometries. The mask stays in the signature as
-    * the spec hook pinning that the fallback set is empty. */
-  private[functions] def cellToBoundaryResolved(
-      h: Long): (Array[(Double, Double)], Int) = {
+  def cellToBoundary(h: Long): Array[(Double, Double)] = {
     requireValid(h)
-    if (isPentagon(h)) return (pentagonBoundary(h), 0)
+    if (isPentagon(h)) return pentagonBoundary(h)
     val res = getResolution(h)
     val (face, i, j, k, _, _) = resolveChart(h)
     val a3 = 3L * (i - k)
@@ -2100,7 +1672,7 @@ object H3 {
       out(v) = (toDegrees(latR), toDegrees(lngR))
       v += 1
     }
-    (out, 0)
+    out
   }
 
   /** Owning chart of a SUBSTRATE (3×-scaled) axial coordinate — the
@@ -2336,18 +1908,15 @@ object H3 {
   /** Pentagon boundary. Corner skeleton: spherical centroid of each
     * (center, nᵢ, nᵢ₊₁) triple over the azimuth-ordered exact ring-1
     * neighbor centers — the same point as h3lib's to second order in
-    * the pitch. UPGRADE (round 13, second half): every pentagon corner
-    * is ALSO a corner of its two flanking ring-1 HEXAGONS, whose
-    * corners are per-face exact since this round — so each corner
-    * adopts the matched neighbor corner (nearest to the skeleton
-    * approximation; corner spacing is ~0.58 pitch vs a second-order
-    * approximation error, so the match is unambiguous) whenever that
-    * neighbor corner itself resolved to its owning chart. Both
-    * flanking hexagons compute a resolved shared corner in the SAME
+    * the pitch. Every pentagon corner is ALSO a corner of its two
+    * flanking ring-1 HEXAGONS, whose corners are exact in the corner's
+    * owning chart — so each corner adopts the matched flank corner
+    * (nearest to the skeleton point; corner spacing is ~0.58 pitch vs
+    * a second-order approximation error, so the match is unambiguous).
+    * Both flanking hexagons compute the shared corner in the SAME
     * owning chart (ulp-identical — spec-pinned), so the choice of
-    * flank doesn't matter. The spherical-centroid skeleton survives
-    * only where BOTH flanks' matched corners are home-chart fallbacks
-    * (enumerated in H3Spec alongside the hexagon fallback set). */
+    * flank doesn't matter; the skeleton point itself is never
+    * returned (a failed match throws). */
   private def pentagonBoundary(h: Long): Array[(Double, Double)] = {
     val (cLat, cLng) = cellToLatLng(h)
     val cLatR = toRadians(cLat); val cLngR = toRadians(cLng)
@@ -2360,9 +1929,9 @@ object H3 {
       sin(cLatR))
     // per-face-exact corner sets of the five flanking hexagons (a
     // pentagon's ring-1 is always 5 hexagons: pentagon base cells are
-    // never adjacent), with their fallback marks
+    // never adjacent)
     val flank = nbrs.map { case (_, _, _, n) =>
-      if (isPentagon(n)) null else cellToBoundaryResolved(n)
+      if (isPentagon(n)) null else cellToBoundary(n)
     }
     def unitOf(latDeg: Double, lngDeg: Double): Array[Double] = {
       val p = toRadians(latDeg); val q = toRadians(lngDeg)
@@ -2379,38 +1948,33 @@ object H3 {
       val n = sqrt(x * x + y * y + z * z)
       val approx = (toDegrees(asin(z / n)), toDegrees(atan2(y, x)))
       val av = unitOf(approx._1, approx._2)
-      // adopt the nearest RESOLVED corner of either flank; threshold
-      // self-scaled by the flank's own circumradius (nearest corner of
-      // the right flank is second-order close; any other corner is
-      // ≥ ~0.58 pitch away)
+      // adopt the nearest corner of either flank; threshold self-scaled
+      // by the flank's own circumradius (nearest corner of the right
+      // flank is second-order close; any other corner is ≥ ~0.58 pitch
+      // away)
       var best: (Double, Double) = null
       var bestD = Double.MaxValue
       Seq(v, (v + 1) % 5).foreach { fi =>
-        val fb = flank(fi)
-        if (fb != null) {
-          val (corners, marks) = fb
+        val corners = flank(fi)
+        if (corners != null) {
           val (fla, flo) = (nbrs(fi)._2, nbrs(fi)._3)
           val fcv = unitOf(fla, flo)
           var w = 0
           while (w < corners.length) {
-            if ((marks & (1 << w)) == 0) {
-              val u = unitOf(corners(w)._1, corners(w)._2)
-              val dx = u(0) - av(0); val dy = u(1) - av(1)
-              val dz = u(2) - av(2)
-              val d2 = dx * dx + dy * dy + dz * dz
-              val cx = u(0) - fcv(0); val cy = u(1) - fcv(1)
-              val cz = u(2) - fcv(2)
-              val r2 = cx * cx + cy * cy + cz * cz // flank circumradius²
-              if (d2 < 0.09 * r2 && d2 < bestD) { bestD = d2; best = corners(w) }
-            }
+            val u = unitOf(corners(w)._1, corners(w)._2)
+            val dx = u(0) - av(0); val dy = u(1) - av(1)
+            val dz = u(2) - av(2)
+            val d2 = dx * dx + dy * dy + dz * dz
+            val cx = u(0) - fcv(0); val cy = u(1) - fcv(1)
+            val cz = u(2) - fcv(2)
+            val r2 = cx * cx + cy * cy + cz * cz // flank circumradius²
+            if (d2 < 0.09 * r2 && d2 < bestD) { bestD = d2; best = corners(w) }
             w += 1
           }
         }
       }
-      // flanks always resolve by construction since round 14 (substrate
-      // edge isometries) — a silent fall-back to the spherical-centroid
-      // skeleton would be invisible to the fallback-mask hook, so make
-      // the invariant LOUD instead (ADVICE r14)
+      // a silent fall-back to the spherical-centroid skeleton would hide
+      // a flank corner that failed to match, so the match is LOUD
       require(best != null,
         f"pentagonBoundary: no resolved flank corner for vertex $v " +
           f"of 0x$h%x — flank corner resolution regressed")

@@ -373,11 +373,7 @@ object ExtQueries {
     * oracle; documented divergence: a pair whose ONLY shared shingles are
     * ultra-common is no longer reported (by construction such pairs have
     * near-zero true Jaccard). */
-  private val MaxShingleDf =
-    // env-overridable for the round-11 cap sweep (tools + PLANS.md);
-    // the oracle SQL interpolates the same val, so Spark and DuckDB
-    // always agree on the cap in force
-    sys.env.get("SPARK_GRAFT_SHINGLE_DF_CAP").map(_.toInt).getOrElse(100)
+  private[graft] val MaxShingleDf = 100
 
   /** True n-gram Jaccard near-dup pairs (≥ 0.1 over distinct k=3 word
     * shingles): candidates from an inverted-index join on the shingle —
@@ -2278,11 +2274,11 @@ object ExtQueries {
     "x_containment_pairs" -> QueryDef.sorted(containmentPairs,
       col("doc_a"), col("doc_b"))(Some(containmentPairsSql), bench = true,
       benchNote = Some("exact containment is Sum(df^2) candidate work " +
-        "by construction; the hot-shingle df cap is the recall/time " +
-        "knob (SPARK_GRAFT_SHINGLE_DF_CAP, mirrored in the oracle). " +
+        "by construction; the hot-shingle df cap (MaxShingleDf, " +
+        "mirrored in the oracle) is the recall/time trade-off. " +
         "Round-11 sf10 sweep: cap 15 keeps pair recall 1.0 " +
         "(x_containment_recall is the oracle-checked witness); " +
-        "default stays 100 - the 100 TB-safe conservative setting.")),
+        "the cap stays 100 - the 100 TB-safe conservative setting.")),
     "x_containment_recall" -> QueryDef(containmentRecall,
       Some(containmentRecallSql)),
     "x_ngram_jaccard_pairs" -> QueryDef(ngramJaccardPairs,

@@ -372,6 +372,47 @@ class H3Spec extends AnyFunSuite {
 
   test("gridRing1: 6 distinct neighbors, symmetric, midpoint-adjacent " +
       "(random cells, all res)") {
+    // Exhaustive part: every cell at res 0-3 (48,008) and each
+    // pentagon's 3-disk at res 0-15 — the domain where a face crossing
+    // or the pentagon quotient could leave a ring short. gridRing1 has
+    // no fallback, so this is the evidence that none is needed: ring
+    // size exactly 6 (5 at a pentagon), distinct, same res, symmetric.
+    val rings = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
+    def ringOf(h: Long): Array[Long] = rings.getOrElseUpdate(h, H3.gridRing1(h))
+    def checkRing(h: Long): Unit = {
+      val ring = ringOf(h)
+      val expected = if (H3.isPentagon(h)) 5 else 6
+      assert(ring.length === expected, f"ring size ${ring.length} at 0x$h%x")
+      assert(ring.distinct.length === ring.length, f"duplicate in ring of 0x$h%x")
+      assert(!ring.contains(h), f"0x$h%x in its own ring")
+      ring.foreach { c =>
+        assert(H3.getResolution(c) === H3.getResolution(h))
+        assert(ringOf(c).contains(h),
+          f"asymmetric adjacency: 0x$c%x does not see 0x$h%x back")
+      }
+    }
+    val baseCells = (0 until 122).map { bc =>
+      (1L << 59) | (bc.toLong << 45) | ((1L << 45) - 1)
+    }
+    var exhaustive = 0
+    for (res <- 0 to 3) {
+      val cells =
+        if (res == 0) baseCells else baseCells.flatMap(H3.cellToChildren(_, res))
+      cells.foreach(checkRing)
+      exhaustive += cells.length
+      rings.clear()
+    }
+    assert(exhaustive === 48008)
+    val pentBcs = (0 until 122).filter(bc => H3.isPentagonCell(baseCells(bc)))
+    assert(pentBcs.length === 12)
+    for (res <- 0 to 15; bc <- pentBcs) {
+      val p = (1L << 59) | (res.toLong << 52) | (bc.toLong << 45) |
+        ((1L << (3 * (15 - res))) - 1)
+      H3.gridDisk(p, 3).foreach(checkRing)
+    }
+    rings.clear()
+
+    // Random part: 400 cells at all res, plus the midpoint law.
     val rnd = new scala.util.Random(20260815L)
     for (_ <- 1 to 400) {
       val lat = math.toDegrees(math.asin(rnd.nextDouble() * 2 - 1))
@@ -384,8 +425,7 @@ class H3Spec extends AnyFunSuite {
       // traversal (face-neighbor isometries + the digit-consistency
       // sign repair) closed the round-11 stitching gap — ring size is
       // exactly 6 (5 at a pentagon) and adjacency is symmetric, with
-      // no bounded-incidence carve-outs. Measured 0 gaps / 0
-      // asymmetries over 10,000 random cells (H3GapProbe).
+      // no bounded-incidence carve-outs.
       assert(ring.length === expected,
         f"ring size ${ring.length} != $expected at " +
           f"($lat%.5f, $lng%.5f) res $res")
@@ -805,14 +845,11 @@ class H3Spec extends AnyFunSuite {
     // same lattice point in the corner's OWNING chart; the pre-round-13
     // home-chart unprojection diverged by up to the projective
     // distortion, which the old adjacent-cells law tolerated at
-    // 0.05·pitch). Law 2: the fallback corner count is pinned at ZERO
-    // since round 14 — the substrate edge-isometry mapping
+    // 0.05·pitch). The substrate edge-isometry mapping
     // (overageNormalizeSub) resolves EVERY corner to its owning chart
-    // exactly (the round-13 enumerated residual was 7/14/24 here).
-    val expectedFallback = Map(0 -> 0, 1 -> 0, 2 -> 0)
+    // exactly, so no corner is exempt from law 1.
     for (res <- 0 to 2) {
       var corners = 0
-      var fallbacks = 0
       var sharedPairs = 0
       var worstRel = 0.0
       val cells = (0 until 122).flatMap { bc =>
@@ -820,21 +857,19 @@ class H3Spec extends AnyFunSuite {
         if (res == 0) Seq(b) else H3.cellToChildren(b, res).toSeq
       }
       val bnd = scala.collection.mutable.Map
-        .empty[Long, (Array[(Double, Double)], Int)]
-      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundaryResolved(h))
+        .empty[Long, Array[(Double, Double)]]
+      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundary(h))
       for (h <- cells if !H3.isPentagonCell(h)) {
-        val (mine, fb) = get(h)
+        val mine = get(h)
         corners += 6
-        fallbacks += Integer.bitCount(fb)
         val ring = H3.gridRing1(h)
         val pitch = haversine(H3.cellToLatLng(h), H3.cellToLatLng(ring.head))
         for (n <- ring if !H3.isPentagonCell(n)) {
-          val (theirs, nfb) = get(n)
-          for (v <- 0 until 6 if (fb & (1 << v)) == 0) {
+          val theirs = get(n)
+          for (v <- 0 until 6) {
             var wi = 0
             while (wi < 6) {
-              if ((nfb & (1 << wi)) == 0 &&
-                  haversine(mine(v), theirs(wi)) < 0.05 * pitch) {
+              if (haversine(mine(v), theirs(wi)) < 0.05 * pitch) {
                 sharedPairs += 1
                 val rel = haversine(mine(v), theirs(wi)) / pitch
                 if (rel > worstRel) worstRel = rel
@@ -844,8 +879,6 @@ class H3Spec extends AnyFunSuite {
           }
         }
       }
-      assert(fallbacks === expectedFallback(res),
-        s"res $res fallback corners: $fallbacks of $corners")
       assert(sharedPairs > corners, // every interior corner matches twice
         s"res $res matched only $sharedPairs shared corner pairs")
       assert(worstRel < 1e-9,
@@ -917,11 +950,7 @@ class H3Spec extends AnyFunSuite {
       assert(cells.size > 500, s"res $res sample too small: ${cells.size}")
       val bnd = scala.collection.mutable.Map
         .empty[Long, Array[(Double, Double)]]
-      def get(h: Long) = bnd.getOrElseUpdate(h, {
-        val (c, fb) = H3.cellToBoundaryResolved(h)
-        assert(fb === 0, s"res $res fallback at ${h.toHexString}")
-        c
-      })
+      def get(h: Long) = bnd.getOrElseUpdate(h, H3.cellToBoundary(h))
       var shared = 0
       for (h <- cells) {
         val mine = get(h)
@@ -1087,17 +1116,17 @@ class H3Spec extends AnyFunSuite {
       for (h <- pents) {
         val corners = H3.cellToBoundary(h)
         assert(corners.length === 5)
-        val flanks = H3.gridRing1(h).map(H3.cellToBoundaryResolved)
+        val flanks = H3.gridRing1(h).map(H3.cellToBoundary)
         for (c <- corners) {
           val cu = unit(c._1, c._2)
           var hits = 0
-          flanks.foreach { case (fc, marks) =>
-            fc.zipWithIndex.foreach { case (w, wi) =>
+          flanks.foreach { fc =>
+            fc.foreach { w =>
               val u = unit(w._1, w._2)
               val d2 = (u(0) - cu(0)) * (u(0) - cu(0)) +
                 (u(1) - cu(1)) * (u(1) - cu(1)) +
                 (u(2) - cu(2)) * (u(2) - cu(2))
-              if (d2 < 1e-24 && (marks & (1 << wi)) == 0) hits += 1
+              if (d2 < 1e-24) hits += 1
             }
           }
           if (hits >= 1) adopted += 1 else approx += 1

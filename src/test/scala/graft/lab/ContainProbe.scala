@@ -15,7 +15,7 @@ object ContainProbe {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.TextF
     val K = 3
-    val cap = 1000 // MaxShingleDf in ExtQueries
+    val cap = graft.queries.ExtQueries.MaxShingleDf
     val sh = graft.parallelScan(spark,
         tbl(spark, sfDir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(array_distinct(
